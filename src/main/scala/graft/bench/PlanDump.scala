@@ -30,8 +30,8 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       // crawl_replay RUNS the whole multi-round loop on construction;
-      // dump the final-report plan shape only (the loop's per-round
-      // plans are covered by the round-debug marks instead).
+      // dump the final-report plan shape only (per-round layer timings
+      // come from perfbench's traced run: `crawl_rounds --trace 1`).
       val txt =
         try {
           val df = graft.SparkEntry.queries(name)(s, sfDir)

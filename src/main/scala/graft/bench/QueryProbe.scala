@@ -18,17 +18,14 @@ object QueryProbe {
       .config("spark.driver.host", "localhost")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // full-evaluation sink by default (the bench's measurement unit,
-    // VERDICT r5 #1); SPARK_GRAFT_PROBE_SINK=count restores the pruned
-    // count for sink-cost A/Bs
-    val useCount = sys.env.get("SPARK_GRAFT_PROBE_SINK").contains("count")
     names.foreach { name =>
       (1 to reps).foreach { i =>
         val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(name)(s, sfDir)
-        val n = if (useCount) df.count()
-                else { df.write.format("noop").mode("overwrite").save(); -1L }
-        println(f"[queryprobe] $name rep$i rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
+        // full-evaluation noop sink: the bench's measurement unit
+        // (VERDICT r5 #1)
+        graft.SparkEntry.queries(name)(s, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        println(f"[queryprobe] $name rep$i sec=${(System.nanoTime() - t0) / 1e9}%.2f")
         // same between-rep scratch-block release as Bench.runQueries:
         // localCheckpoint blocks are otherwise GC-deferred and would
         // accumulate across reps, skewing the later ones

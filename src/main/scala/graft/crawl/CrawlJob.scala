@@ -382,21 +382,10 @@ object CrawlJob {
     s
   }
 
-  /** Env-gated round tracing (SPARK_GRAFT_ROUND_DEBUG=1): stderr
-    * timing of the three blocking driver actions per round.
-    */
-  private val roundDebug = sys.env.get("SPARK_GRAFT_ROUND_DEBUG").contains("1")
-
   private def runRoundInner(spark: SparkSession, cfg: Config, log: SnapshotLog,
                             snap: SnapshotLog.Snapshot, round: Int,
                             net: CrawlNet, carry: Carry): RoundResult = {
     import spark.implicits._
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (roundDebug) {
-      val now = System.nanoTime()
-      System.err.println(f"[round $round] $what ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     if (cfg.roundShufflePartitions > 0)
       spark.conf.set("spark.sql.shuffle.partitions", cfg.roundShufflePartitions)
     if (!cfg.roundWholeStageCodegen)
@@ -431,7 +420,6 @@ object CrawlJob {
     val deferredPrev =
       if (snap.props.get("deferred").contains("0")) spark.emptyDataset[DocTask]
       else readFrontier(spark, log, snap)
-    mark("listing_read")
 
     // ---- 1. listing expansion (synthetic S1 scan) -------------------
     // The whole per-(exchange,date,category) stream state is one row;
@@ -471,7 +459,6 @@ object CrawlJob {
     // agg buffers; measured at the 10x bench point).
     val batchFirst = SeenFilter.firstWinsAgg(
       kept.drop("adjunct_url", "__passes"), Seq("seen_key"), "arrival_seq")
-    mark("pb_filters")
 
     // ---- 4. bloom pre-filter + exact anti-join vs seen --------------
     // Size-adaptive probe (see Config.sketchBroadcastMaxBytes): small
@@ -513,7 +500,6 @@ object CrawlJob {
     }
     val newUniqueDf = definitelyNew.unionByName(confirmedNew)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("pb_seen")
 
     // ---- 5. build this round's sketch delta over new keys ----------
     val sketchDelta = SeenFilter.buildPartitionedBloom(
@@ -558,7 +544,6 @@ object CrawlJob {
     val assigned = Scheduler
       .assignVirtualTicksCols(schedIn, cfg.saltCount, cfg.tokensPerTick, cfg.tickMs)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("pb_sched")
     val docTaskCols = Seq("url", "host", "announceEpochDay", "secCode",
       "pageDepth", "seenKey", "arrivalSeq", "company", "title", "timeMs", "timeStr")
     val toFetch = assigned.where(col("tick_index") < cfg.ticksPerRound)
@@ -607,7 +592,6 @@ object CrawlJob {
         (d.doc_id, d.spans, round)
       }.toDF("doc_id", "spans", "fetch_round")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("pb_fetch")
 
     // ---- 9. per-partition lineage metrics ----------------------------
     // ONE action materializes every persisted stage and yields every
@@ -672,9 +656,7 @@ object CrawlJob {
         .unionByName(partCounts(deferredNow, "deferred"))
         .unionByName(partCounts(denied, "robots_denied"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("plan_build")
     val metricsRows = metricsDelta.collect()
-    mark("metrics_action")
     val totalsByCounter = metricsRows
       .groupBy(_.getString(1))
       .view.mapValues(_.map(_.getLong(3)).sum).toMap
@@ -763,7 +745,6 @@ object CrawlJob {
            (nextSketchMap.map(localSketchDf).getOrElse(
              SeenFilter.mergeSketches(sketchPrev.get.unionByName(sketchDelta)))))
        else Map.empty[String, DataFrame])
-    mark("growth")
     val next = log.commit(
       deltas = deltas,
       replaced = replaced,
@@ -774,7 +755,6 @@ object CrawlJob {
         "robots_denied" -> deniedCnt.toString, "fetched" -> fetchedCnt.toString,
         "invalid" -> invalidCnt.toString, "deferred" -> deferredCnt.toString))
 
-    mark("commit")
     Seq(candidates, probed, newUniqueDf, gated, assigned,
       deferredNow, probedFetch, fetchedDocs, metricsDelta)
       .foreach(_.unpersist())

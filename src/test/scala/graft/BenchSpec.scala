@@ -83,4 +83,16 @@ class BenchSpec extends SparkSpec {
     // a floor taken on a loud box can't blind the gate: capped at 2x
     assert(Bench.canaryBound(1.44, 9.0) == 2.88)
   }
+
+  test("ReplayBench.run: the headline job's counts are consistent and repeat exactly") {
+    val Seq(r1, r2) = Seq.fill(2)(graft.bench.ReplayBench.run(spark, 20000))
+    assert(r1.fetched > 0, r1.toString)
+    assert(r1.fetched <= r1.scheduled && r1.scheduled <= r1.urlsSeen, r1.toString)
+    assert(r1.spans >= r1.fetched, r1.toString)
+    // Bench reads these two marks (stageSec) into the artifact
+    assert(Set("state_setup", "schedule_fetch_extract").subsetOf(r1.stageSec.keySet),
+      r1.stageSec.toString)
+    assert((r1.urlsSeen, r1.scheduled, r1.fetched, r1.spans) ==
+      (r2.urlsSeen, r2.scheduled, r2.fetched, r2.spans))
+  }
 }
